@@ -222,8 +222,8 @@ final class Cdfc(
         // concurrent fits (FitPool); insert in task order -> deterministic
         FitPool.map(df.sparkSession, "cdfc-lr", named) { case (n, e) =>
           val mat = matUse.select(dfLr.columns.map(col) :+ col(n).as("__lr_feat"): _*)
-          val auc = LrScorer.score(mat, Seq("__lr_feat"), "__cdfc_label",
-            cfg.lrFolds, cfg.lrGrid).auc
+          val auc = LrScorer.cvAuc(mat, Seq("__lr_feat"), "__cdfc_label",
+            cfg.lrFolds, cfg.lrGrid)
           // stored ROUNDED (1e-9): every downstream comparison (epsilon
           // gate, champion maxBy, AICc per-class pick) is tie-sensitive, and
           // lbfgs AUCs wobble by ULPs run-to-run (task-completion-ordered
@@ -326,13 +326,15 @@ final class Cdfc(
     val spark = df.sparkSession
     def toRow(s: Scored): SurvivorRow =
       SurvivorRow(s.complexity, s.key, s.score, s.complexity, s.passed, s.inherited)
+    // the input never changes between layers: count its partition rows once
+    lazy val inputPartitions = Checkpoint.partitionRows(df)
     def commitLayer(layer: Int, newRows: Seq[Scored], t0: Long): Unit =
       checkpointDir.foreach { d =>
         Checkpoint.save(spark, d, SearchState(layer, seen.toSet, fingerprints.toSet,
           scores.toMap, survivors.map(toRow).toSeq, fit, profiles.toMap, lrScores.toMap))
         Checkpoint.appendAudit(spark, d, newRows.map(toRow),
           (System.nanoTime() - t0) / 1000000L)
-        Checkpoint.appendLineage(d, layer, df)
+        Checkpoint.appendLineage(spark, d, layer, inputPartitions)
       }
     val restored = checkpointDir.flatMap(d => Checkpoint.load(spark, d, cfg.cMax))
     restored.foreach { st =>

@@ -55,10 +55,6 @@ object LrScorer {
       aiccComp: Double = Double.NaN,
       bicComp: Double = Double.NaN)
 
-  private final case class FoldStats(
-      auc: Double, rss: Double, n: Long,
-      accuracy: Double, f1: Double, consistency: Double)
-
   /** Reference default LR grid: 7 C values (`ComplexityDrivenFeature
     * Construction.py:40-47`), C = 1/regParam.
     */
@@ -67,77 +63,171 @@ object LrScorer {
   def foldCol(salt: Int, k: Int): Column =
     pmod(xxhash64(struct(col("*")), lit(salt)), lit(k)).cast("int")
 
-  /** One (grid value, fold) fit + its out-of-fold metric aggregates: the
-    * model fit, the AUC sweep, ONE metric aggregation over the predictions,
-    * and ONE consistency aggregation over the fold's feature tuples.
+  /** Out-of-fold aggregates of one fold's predictions. */
+  private final case class FoldAgg(rss: Double, n: Long, accuracy: Double, f1: Double)
+
+  /** One (grid value, fold) cell after phase 1: the fold's AUC, plus the
+    * out-of-fold metrics that only the rss tie-break and phase 2 read —
+    * computed on first use, so a cell nobody asks about costs no job.
     *
-    * @param trainLabels distinct label values present in the TRAINING fold
-    *                    (precomputed once per score() from the (fold, label)
-    *                    histogram — spark.ml's `numClasses = maxLabel + 1`
-    *                    inference reports 2 classes for an all-ones fold, so
-    *                    it cannot detect degeneracy, and an EMPTY training
-    *                    fold has no model at all)
-    * @param testRows    row count of the test fold (0 -> no predictions to
-    *                    aggregate; the metric aggs would return nulls)
+    * @param scored the test fold and the predictions of the model fitted on
+    *               the other folds, with p(1) as a column; None when the
+    *               test fold is empty (nothing to score)
     */
-  private def fitFold(
-      df: DataFrame,
-      assembler: VectorAssembler,
-      featureCols: Seq[String],
-      reg: Double,
-      f: Int,
-      trainLabels: Seq[Double],
-      testRows: Long): FoldStats = {
-    if (testRows == 0)
-      // no out-of-fold rows: nothing to score. Vacuous conventions — zero
-      // residual mass (rss 0, n 0), accuracy/consistency 1 (no row is
-      // wrong/inconsistent), f1 0 (no positives retrieved), coin AUC.
-      return FoldStats(0.5, 0.0, 0L, 1.0, 0.0, 1.0)
-    val test = assembler.transform(df.filter(col("fold") === f))
-    // an empty or single-class training fold admits no separating model:
-    // score the constant predictor it implies — p(1) = the lone label (or
-    // the 0.5 coin when there is no training row at all), AUC = 0.5
-    val degenerate = trainLabels.size < 2
-    val (p1: Column, pred: DataFrame, auc: Double) =
-      if (degenerate) {
-        (lit(trainLabels.headOption.getOrElse(0.5)), test, 0.5)
-      } else {
-        val train = assembler.transform(df.filter(col("fold") =!= f))
-        val model = new LogisticRegression()
-          .setRegParam(reg).setMaxIter(50).setTol(1e-6)
-          .fit(train)
-        val pred = model.transform(test)
-        val auc = new BinaryClassificationEvaluator()
-          .setRawPredictionCol("probability").setMetricName("areaUnderROC")
-          .evaluate(pred)
-        (vectorElement(col("probability"), 1), pred, auc)
-      }
-    val hard = (p1 > 0.5).cast("double")
-    val m = pred
-      .select(p1.as("p"), col("label"), hard.as("yh"))
-      .agg(
-        sum(pow(col("label") - col("p"), 2)).as("rss"),
-        count(lit(1)).as("n"),
-        avg((col("yh") === col("label")).cast("double")).as("acc"),
-        sum(when(col("yh") === 1.0 && col("label") === 1.0, 1L).otherwise(0L)).as("tp"),
-        sum(when(col("yh") === 1.0 && col("label") === 0.0, 1L).otherwise(0L)).as("fp"),
-        sum(when(col("yh") === 0.0 && col("label") === 1.0, 1L).otherwise(0L)).as("fn"))
-      .head()
-    val (tp, fp, fn) = (m.getAs[Long]("tp"), m.getAs[Long]("fp"), m.getAs[Long]("fn"))
-    val f1 = if (2 * tp + fp + fn == 0) 0.0 else 2.0 * tp / (2.0 * tp + fp + fn)
-    val cons = test
-      .groupBy(featureCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"), countDistinct(col("label")).as("__d"))
-      .agg((sum(when(col("__d") === 1, col("__n")).otherwise(0L)).cast("double") /
-        sum(col("__n"))).as("c"))
-      .head().getDouble(0)
-    FoldStats(auc, m.getAs[Double]("rss"), m.getAs[Long]("n"),
-      m.getAs[Double]("acc"), f1, cons)
+  private final class FoldFit(val auc: Double, scored: Option[(DataFrame, DataFrame, Column)]) {
+
+    /** rss / n / accuracy / f1 in ONE aggregation over the predictions. An
+      * empty test fold takes the vacuous conventions: zero residual mass
+      * (rss 0, n 0), accuracy 1 (no row is wrong), f1 0 (no positive found).
+      */
+    lazy val agg: FoldAgg = scored.fold(FoldAgg(0.0, 0L, 1.0, 0.0)) { case (_, pred, p1) =>
+      val hard = (p1 > 0.5).cast("double")
+      val m = pred
+        .select(p1.as("p"), col("label"), hard.as("yh"))
+        .agg(
+          sum(pow(col("label") - col("p"), 2)).as("rss"),
+          count(lit(1)).as("n"),
+          avg((col("yh") === col("label")).cast("double")).as("acc"),
+          sum(when(col("yh") === 1.0 && col("label") === 1.0, 1L).otherwise(0L)).as("tp"),
+          sum(when(col("yh") === 1.0 && col("label") === 0.0, 1L).otherwise(0L)).as("fp"),
+          sum(when(col("yh") === 0.0 && col("label") === 1.0, 1L).otherwise(0L)).as("fn"))
+        .head()
+      val (tp, fp, fn) = (m.getAs[Long]("tp"), m.getAs[Long]("fp"), m.getAs[Long]("fn"))
+      val f1 = if (2 * tp + fp + fn == 0) 0.0 else 2.0 * tp / (2.0 * tp + fp + fn)
+      FoldAgg(m.getAs[Double]("rss"), m.getAs[Long]("n"), m.getAs[Double]("acc"), f1)
+    }
+
+    /** Fraction of test rows whose feature tuple maps to a single label, in
+      * ONE aggregation (1 for an empty fold: no row is inconsistent).
+      */
+    def consistency(featureCols: Seq[String]): Double = scored.fold(1.0) { case (test, _, _) =>
+      test
+        .groupBy(featureCols.map(col): _*)
+        .agg(count(lit(1)).as("__n"), countDistinct(col("label")).as("__d"))
+        .agg((sum(when(col("__d") === 1, col("__n")).otherwise(0L)).cast("double") /
+          sum(col("__n"))).as("c"))
+        .head().getDouble(0)
+    }
   }
 
-  /** CV-score one candidate set: per grid value, k-fold CV AUC; keep the
-    * best mean; the full per-fold metric suite comes from the best grid's
-    * out-of-fold predictions. All folds-by-grid fits submit concurrently.
+  /** The cached fold matrix of one CV run and its per-fold label histogram. */
+  private final case class Folds(
+      df: DataFrame,
+      k: Int,
+      assembler: VectorAssembler,
+      trainLabels: Map[Int, Seq[Double]],
+      testRows: Map[Int, Long])
+
+  /** Build the fold matrix, run `body` on it, and release its cache. */
+  private def withFolds[A](
+      dfIn: DataFrame,
+      featureCols: Seq[String],
+      labelCol: String,
+      folds: Int,
+      saltSeed: Int)(body: Folds => A): A = {
+    val df = dfIn
+      // fold hash over the FULL input row ([[foldCol]] — feature-only
+      // hashes collapse low-cardinality features into single folds)
+      .withColumn("fold", foldCol(saltSeed, folds))
+      .select((featureCols.map(c => col(c).cast("double").as(c)) :+
+        col(labelCol).cast("double").as("label") :+ col("fold")): _*)
+      .na.drop()
+      .cache()
+    try {
+      // one small job classifying every fold, which also materializes the
+      // cache before the concurrent fits race to build it: per-(fold, label)
+      // counts give each TRAINING fold's distinct labels (degenerate-fold
+      // detection that spark.ml's maxLabel+1 numClasses inference cannot do)
+      // and each test fold's row count (an empty fold has nothing to score)
+      val foldLabel = df.groupBy(col("fold"), col("label")).count().collect()
+        .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
+      val trainLabels: Map[Int, Seq[Double]] = (0 until folds).map(f =>
+        f -> foldLabel.iterator.filter(_._1 != f).map(_._2).toSeq.distinct.sorted).toMap
+      val testRows: Map[Int, Long] = (0 until folds).map(f =>
+        f -> foldLabel.iterator.filter(_._1 == f).map(_._3).sum).toMap
+      val assembler = new VectorAssembler()
+        .setInputCols(featureCols.toArray).setOutputCol("features")
+      body(Folds(df, folds, assembler, trainLabels, testRows))
+    } finally { df.unpersist(); () }
+  }
+
+  /** Phase 1 of one (grid value, fold) cell: the model fit and its AUC —
+    * no metric aggregation runs here.
+    */
+  private def fitFold(fs: Folds, reg: Double, f: Int): FoldFit = {
+    if (fs.testRows(f) == 0) return new FoldFit(0.5, None) // coin AUC
+    val test = fs.assembler.transform(fs.df.filter(col("fold") === f))
+    val trainLabels = fs.trainLabels(f)
+    if (trainLabels.size < 2)
+      // an empty or single-class training fold admits no separating model:
+      // score the constant predictor it implies — p(1) = the lone label (or
+      // the 0.5 coin when there is no training row at all), AUC = 0.5
+      new FoldFit(0.5, Some((test, test, lit(trainLabels.headOption.getOrElse(0.5)))))
+    else {
+      val train = fs.assembler.transform(fs.df.filter(col("fold") =!= f))
+      val model = new LogisticRegression()
+        .setRegParam(reg).setMaxIter(50).setTol(1e-6)
+        .fit(train)
+      val pred = model.transform(test)
+      val auc = new BinaryClassificationEvaluator()
+        .setRawPredictionCol("probability").setMetricName("areaUnderROC")
+        .evaluate(pred)
+      new FoldFit(auc, Some((test, pred, vectorElement(col("probability"), 1))))
+    }
+  }
+
+  /** Phase 1 of CV: every grid-by-fold fit and its AUC, all submitted
+    * concurrently; returns the winning grid point's folds.
+    *
+    * Primary criterion: best mean CV AUC (the reference's). Tie-break:
+    * LOWER out-of-fold rss — a separable candidate ties every grid point at
+    * AUC 1.0, and the reference's first-in-grid-order pick would keep the
+    * most-regularized (worst-calibrated) model, making the rss the
+    * information criteria feed on degenerate; preferring the calibrated
+    * model among AUC-equals is the deterministic, semantics-preserving fix.
+    * The rss is aggregated only for the tied grid points, since no other
+    * decision reads it. BOTH channels are rounded before comparison: lbfgs
+    * reduces its treeAggregate partials in task-completion order, so a
+    * fit's floats wobble by ULPs run-to-run (1.0 vs 1-ulp AUC on separable
+    * data) and an exact-equality tie test would flip the winner
+    * nondeterministically.
+    */
+  private def bestGrid(fs: Folds, grid: Seq[Double]): Seq[FoldFit] = {
+    val tasks = for (reg <- grid; f <- 0 until fs.k) yield (reg, f)
+    val fits = FitPool.map(fs.df.sparkSession, "lr-cv", tasks) { case (reg, f) =>
+      fitFold(fs, reg, f)
+    }
+    val perGrid = grid.indices.map(gi => fits.slice(gi * fs.k, (gi + 1) * fs.k))
+    // total order (NaN == NaN), as the tuple maxBy it replaces compared
+    val aucKey = perGrid.map(per => math.rint(per.map(_.auc).sum / fs.k * 1e9))
+    val top = aucKey.max(Ordering.Double.TotalOrdering)
+    val tied = perGrid.indices
+      .filter(i => java.lang.Double.compare(aucKey(i), top) == 0).map(perGrid)
+    if (tied.size == 1) tied.head
+    else {
+      // concurrent like the fits (each lazy agg is one job)
+      FitPool.map(fs.df.sparkSession, "lr-cv", tied.flatten)(_.agg)
+      tied.maxBy(per => -math.rint(per.map(_.agg.rss).sum * 1e6))
+    }
+  }
+
+  private def meanAuc(best: Seq[FoldFit]): Double = best.map(_.auc).sum / best.size
+
+  /** Phase 1 alone: the k-fold CV AUC of the best grid point — the search's
+    * gain oracle, which reads nothing else. Equals `score(...).auc`.
+    */
+  def cvAuc(
+      df: DataFrame,
+      featureCols: Seq[String],
+      labelCol: String,
+      folds: Int = 5,
+      grid: Seq[Double] = Seq(1.0),
+      saltSeed: Int = 42): Double =
+    withFolds(df, featureCols, labelCol, folds, saltSeed)(fs => meanAuc(bestGrid(fs, grid)))
+
+  /** CV-score one candidate set: phase 1 ([[cvAuc]]) picks the grid point;
+    * phase 2 computes the full per-fold metric suite from that grid point's
+    * out-of-fold predictions only (its folds concurrently).
     *
     * @param complexity representation complexity of the candidate set, used
     *                   by the `*_complexity` information criteria
@@ -150,69 +240,35 @@ object LrScorer {
       folds: Int = 5,
       grid: Seq[Double] = Seq(1.0),
       saltSeed: Int = 42,
-      complexity: Int = 0): LrScore = {
-    val df = dfIn
-      // fold hash over the FULL input row ([[foldCol]] — feature-only
-      // hashes collapse low-cardinality features into single folds)
-      .withColumn("fold", foldCol(saltSeed, folds))
-      .select((featureCols.map(c => col(c).cast("double").as(c)) :+
-        col(labelCol).cast("double").as("label") :+ col("fold")): _*)
-      .na.drop()
-      .cache()
-    try {
-      df.count() // materialize the cache once, before the concurrent fits race to build it
-      // one small job classifying every fold: per-(fold, label) counts give
-      // each TRAINING fold's distinct labels (degenerate-fold detection that
-      // spark.ml's maxLabel+1 numClasses inference cannot do) and each test
-      // fold's row count (guards the empty-fold metric aggregation)
-      val foldLabel = df.groupBy(col("fold"), col("label")).count().collect()
-        .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
-      val trainLabels: Map[Int, Seq[Double]] = (0 until folds).map(f =>
-        f -> foldLabel.iterator.filter(_._1 != f).map(_._2).toSeq.distinct.sorted).toMap
-      val testRows: Map[Int, Long] = (0 until folds).map(f =>
-        f -> foldLabel.iterator.filter(_._1 == f).map(_._3).sum).toMap
-      val assembler = new VectorAssembler()
-        .setInputCols(featureCols.toArray).setOutputCol("features")
-      val tasks = for (reg <- grid; f <- 0 until folds) yield (reg, f)
-      val stats = FitPool.map(df.sparkSession, "lr-cv", tasks) { case (reg, f) =>
-        fitFold(df, assembler, featureCols, reg, f, trainLabels(f), testRows(f))
-      }
-      val perGrid = grid.indices.map(gi => stats.slice(gi * folds, (gi + 1) * folds))
-      // primary: best mean CV AUC (the reference's criterion). Tie-break:
-      // LOWER out-of-fold rss — a separable candidate ties every grid point
-      // at AUC 1.0, and the reference's first-in-grid-order pick would keep
-      // the most-regularized (worst-calibrated) model, making the rss the
-      // information criteria feed on degenerate; preferring the calibrated
-      // model among AUC-equals is the deterministic, semantics-preserving fix.
-      // BOTH channels are rounded before comparison: lbfgs reduces its
-      // treeAggregate partials in task-completion order, so a fit's floats
-      // wobble by ULPs run-to-run (1.0 vs 1-ulp AUC on separable data) and
-      // an exact-equality tie test would flip the winner nondeterministically
-      val best = perGrid.maxBy(per => (
-        math.rint(per.map(_.auc).sum / folds * 1e9),
-        -math.rint(per.map(_.rss).sum * 1e6)))
+      complexity: Int = 0): LrScore =
+    withFolds(dfIn, featureCols, labelCol, folds, saltSeed) { fs =>
+      val best = bestGrid(fs, grid)
+      val suite = FitPool.map(fs.df.sparkSession, "lr-cv", best)(ff =>
+        (ff.agg, ff.consistency(featureCols)))
+      val aggs = suite.map(_._1)
 
-      def mean(g: FoldStats => Double): Double = best.map(g).sum / folds
+      def mean(xs: Seq[Double]): Double = xs.sum / folds
       val kF = featureCols.size.toDouble
       val kC = complexity + featureCols.size + 1.0
-      def aicOf(s: FoldStats, k: Double) =
+      def aicOf(s: FoldAgg, k: Double) =
         2 * k + s.n * math.log(math.max(s.rss, 1e-12) / s.n)
-      def aiccOf(s: FoldStats, k: Double) =
+      def aiccOf(s: FoldAgg, k: Double) =
         aicOf(s, k) + (2 * k * (k + 1)) / math.max(s.n - k - 1, 1.0)
-      def bicOf(s: FoldStats, k: Double) =
+      def bicOf(s: FoldAgg, k: Double) =
         math.log(s.n.toDouble) * k + s.n * math.log(math.max(s.rss, 1e-12) / s.n)
 
       LrScore(
-        auc = mean(_.auc),
-        rss = best.map(_.rss).sum,
-        n = best.map(_.n).sum,
-        accuracy = mean(_.accuracy),
-        f1 = mean(_.f1),
-        consistency = mean(_.consistency),
-        aicFeat = mean(aicOf(_, kF)), aiccFeat = mean(aiccOf(_, kF)), bicFeat = mean(bicOf(_, kF)),
-        aicComp = mean(aicOf(_, kC)), aiccComp = mean(aiccOf(_, kC)), bicComp = mean(bicOf(_, kC)))
-    } finally df.unpersist()
-  }
+        auc = meanAuc(best),
+        rss = aggs.map(_.rss).sum,
+        n = aggs.map(_.n).sum,
+        accuracy = mean(aggs.map(_.accuracy)),
+        f1 = mean(aggs.map(_.f1)),
+        consistency = mean(suite.map(_._2)),
+        aicFeat = mean(aggs.map(aicOf(_, kF))), aiccFeat = mean(aggs.map(aiccOf(_, kF))),
+        bicFeat = mean(aggs.map(bicOf(_, kF))),
+        aicComp = mean(aggs.map(aicOf(_, kC))), aiccComp = mean(aggs.map(aiccOf(_, kC))),
+        bicComp = mean(aggs.map(bicOf(_, kC))))
+    }
 
   private def vectorElement(v: Column, i: Int): Column =
     element_at(org.apache.spark.ml.functions.vector_to_array(v), i + 1)
@@ -223,7 +279,7 @@ object LrScorer {
   def repeatedCv(df: DataFrame, featureCols: Seq[String], labelCol: String,
       repeats: Int = 5, folds: Int = 5, grid: Seq[Double] = Seq(1.0)): (Double, Double) = {
     val scores = FitPool.map(df.sparkSession, "lr-rcv", 0 until repeats)(r =>
-      score(df, featureCols, labelCol, folds, grid, saltSeed = 42 + r).auc)
+      cvAuc(df, featureCols, labelCol, folds, grid, saltSeed = 42 + r))
     val mu = scores.sum / repeats
     val sd = math.sqrt(scores.map(s => (s - mu) * (s - mu)).sum / repeats)
     (mu, sd)

@@ -117,4 +117,51 @@ class LrScorerSpec extends SparkSpec {
     assert(maxInFlight.get >= 2,
       s"expected overlapping fit jobs, max in flight = ${maxInFlight.get}")
   }
+
+  // one partition: lbfgs's treeAggregate has a single partial to reduce, so
+  // every fitted float is bit-stable from run to run and exact equality
+  // between two separate CV runs is a meaningful check
+  private def onePart = planted.withColumn("prod", col("x1") * col("x2")).coalesce(1)
+
+  test("cvAuc is phase 1 of score: equal AUC on a 1-point and a 2-point grid") {
+    val df = onePart
+    for (grid <- Seq(Seq(1.0), Seq(1.0, 1000.0))) {
+      val auc = LrScorer.cvAuc(df, Seq("x1", "x2"), "y", folds = 3, grid = grid)
+      val s = LrScorer.score(df, Seq("x1", "x2"), "y", folds = 3, grid = grid)
+      assert(auc == s.auc, s"grid=$grid: cvAuc=$auc score.auc=${s.auc}")
+      assert(auc > 0.6 && auc < 1.0, s"grid=$grid: auc=$auc")
+    }
+  }
+
+  test("tied grid points: score keeps the lowest-rss one") {
+    // a single separable feature ranks rows the same under every regParam,
+    // so both grid points tie on AUC and the rss tie-break decides
+    val df = onePart
+    val (grid, folds) = (Seq(1.0, 0.01), 3)
+    val each = grid.map(r => LrScorer.score(df, Seq("prod"), "y", folds = folds, grid = Seq(r)))
+    assert(each.map(e => math.rint(e.auc * 1e9)).distinct.size == 1, s"no tie: $each")
+    val both = LrScorer.score(df, Seq("prod"), "y", folds = folds, grid = grid)
+    val expected = each.maxBy(e => (math.rint(e.auc * 1e9), -math.rint(e.rss * 1e6)))
+    assert(expected eq each(1), s"the tie-break should pick the weaker regularization: $each")
+    assert(both == expected, s"both=$both expected=$expected")
+  }
+
+  test("cvAuc submits fewer Spark jobs than score: no metric suite runs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val df = planted.withColumn("prod", col("x1") * col("x2"))
+    def jobsOf(body: => Any): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+      }
+      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try { body; org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      n.get
+    }
+    val cv = jobsOf(LrScorer.cvAuc(df, Seq("prod"), "y", folds = 3))
+    val full = jobsOf(LrScorer.score(df, Seq("prod"), "y", folds = 3))
+    assert(cv > 0 && cv < full, s"cvAuc jobs=$cv, score jobs=$full")
+  }
 }
